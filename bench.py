@@ -4,6 +4,17 @@ Runs the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]. Each query is executed
 once to warm (JVM/codegen/file-cache) and then timed as the median of 3
 runs, collecting results fully (the driver-visible cost).
+
+Two adjudication modes share the same measurement core:
+
+- ``--isolated [--rotate K] [sf_dir] query ...``: one fresh block per
+  query (warm, then median-of-3 back-to-back, nothing else interleaved),
+  for when a single number needs adjudication against its row.
+- ``--sweep [sf_dir] [threshold_sec]``: one timed pass over EVERY
+  registry query, with calib probes between chunks, as a triage ranking.
+
+Usage: python bench.py [--isolated [--rotate K] [sf_dir] query ...
+                        | --sweep [sf_dir] [threshold_sec]]
 """
 
 from __future__ import annotations
@@ -175,7 +186,7 @@ HEADLINE = [
 
 # Most-recent ISOLATED sf0.1 row per headline query. PROTOCOL TAG
 # (round 10, VERDICT r9 order #1): each row is the MEDIAN of isolated
-# medians across >= 3 independent passes (tools/bench_isolated.py, clean
+# medians across >= 3 independent passes (bench.py --isolated, clean
 # unpersist protocol, 2026-08-16), replacing r9's MIN-of-passes rows.
 # Rationale: the min is the luckiest scheduling window ever observed, and
 # on sub-second fixed-overhead-dominated queries a normal-day measurement
@@ -473,63 +484,137 @@ def flag_floor_drift(
     return flagged
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+def retry_due(median: float, ref: float, attempts: int, max_retries: int) -> bool:
+    """The headline's retry gate: re-run a query whose median is more
+    than 2x its reference AND more than 0.5 s above it (the absolute
+    guard keeps fixed-overhead jitter on sub-second queries from firing),
+    while fewer than ``max_retries`` re-runs have been made.
 
-    import __spark_entry__ as e
-    from randas_spark.session import get_spark
+    Gate 1 (contention, round-7 protocol) passes the run's own min-of-3
+    floor with one retry: a median > 2x its own floor means a
+    contamination window covered >=2 of that query's 3 samples. Gate 2
+    (round-8, VERDICT r7 item 1) passes the committed calm-box
+    BASELINE_ROWS row with two retries: gate 1 only sees same-run
+    samples, so a window covering all three rounds sails through it."""
+    return attempts < max_retries and median > 2.0 * ref and median - ref > 0.5
 
-    spark = get_spark("bench")
-    qs = e.queries()
-    names = [n for n in HEADLINE if n in qs] or list(qs)[:8]
 
-    # Warm pass (JVM/codegen/file cache), then 3 interleaved timing rounds,
-    # reported as MEDIAN-of-3 — the BASELINE.md protocol stat. Interleaving
-    # defends against the box's intermittent external contention (measured:
-    # multi-second windows that inflate whichever query is running 5-10x) —
-    # back-to-back repeats of one query can land entirely inside such a
-    # window; spread rounds make that improbable, and the median discards
-    # a single contaminated round entirely.
-    def drop_persisted() -> None:
-        # clearCache() misses localCheckpoint RDDs, which pin executor
-        # storage for the session's lifetime — consecutive measurements
-        # of checkpoint-heavy queries (the shingle-dedup family)
-        # accumulate pinned blocks and inflate later samples (diagnosed
-        # r8). Unpersist every persistent RDD between measurements.
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(True)
+CHUNK = 5  # sweep queries per calib bracket (~0.3 s probe per 5 queries)
+CALIB_GATE = 2.0  # bracketing witness > gate x calib floor => re-run chunk
+
+
+def over_calib_gate(calibs: list[float], floor: float) -> bool:
+    """A calib witness pair shows contention: either probe is more than
+    CALIB_GATE x the calib floor."""
+    return any(c > CALIB_GATE * floor for c in calibs)
+
+
+def decide_chunk(
+    first: dict[str, float],
+    first_calibs: list[float],
+    rerun: dict[str, float] | None = None,
+    rerun_calibs: list[float] | None = None,
+) -> tuple[dict[str, tuple[float, list[float]]], list[dict]]:
+    """The sweep's chunk decision. ``first`` and ``rerun`` map query ->
+    seconds (a failed run is absent); a chunk the gate passed has no
+    rerun. Each query keeps its lower time together with the calib pair
+    that brackets the run the time came from, so a kept first-run time
+    is never witnessed by the re-run's probes.
+
+    Also returns the witness records the gate let through unflagged —
+    the pair of a clean chunk, or the re-run pair of a retried one —
+    with the queries whose kept time they bracket, for the end-of-sweep
+    recheck in :func:`late_contaminated`."""
+    kept = {}
+    for name, t in first.items():
+        r = (rerun or {}).get(name)
+        kept[name] = (r, rerun_calibs) if r is not None and r < t else (t, first_calibs)
+    unflagged = first_calibs if rerun is None else rerun_calibs
+    took = [name for name, (_, w) in kept.items() if w is unflagged]
+    return kept, ([{"queries": took, "calibs": unflagged}] if took else [])
+
+
+def late_contaminated(records: list[dict], floor: float) -> list[dict]:
+    """Unflagged witness records (from :func:`decide_chunk`) that cross
+    the calib gate against the sweep's FINAL floor. The gate judges each
+    chunk against the running min of the probes so far; a session that
+    starts inside a contention window has an inflated floor, so early
+    chunks pass trivially and are never re-run (and a re-run's own pair
+    is never gated at all). Re-checking at the end names them; the gate
+    itself stays at CALIB_GATE."""
+    return [r for r in records if over_calib_gate(r["calibs"], floor)]
+
+
+def drop_persisted(spark) -> None:
+    """clearCache() misses localCheckpoint RDDs, which pin executor
+    storage for the session's lifetime — consecutive measurements of
+    checkpoint-heavy queries (the shingle-dedup family) accumulate
+    pinned blocks and inflate later samples (diagnosed r8: ppjoin
+    medians inflated ~2x by run 3). Unpersist every persistent RDD
+    between measurements."""
+    spark.catalog.clearCache()
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        it.next()._2().unpersist(True)
+
+
+def calib(spark) -> float:
+    """Fixed-size JVM workload (constant work, no I/O): its wall time
+    moves ONLY with external box contention, so each probe is a
+    contamination witness recorded alongside the results — a probe 2-10x
+    its floor means the measurements next to it carry the same
+    inflation."""
+    t0 = time.perf_counter()
+    spark.range(200_000_000).selectExpr("sum(id * 3 + 1)").collect()
+    return round(time.perf_counter() - t0, 4)
+
+
+def run_clean(spark, fn) -> float:
+    """Wall seconds of one ``fn()``, then drop_persisted off the clock
+    (also when ``fn`` raises), so storage pressure never carries over
+    into the next measurement."""
+    t0 = time.perf_counter()
+    try:
+        fn()
+        return time.perf_counter() - t0
+    finally:
+        drop_persisted(spark)
+
+
+def median3(spark, fn, warm: bool = True) -> tuple[float, float]:
+    """The warm-then-median-of-3 timer: one untimed ``fn()`` to warm the
+    JVM, codegen and file cache (skipped when ``warm`` is False), then
+    three run_clean samples. Returns (median, min) seconds, 4 places."""
+    if warm:
+        run_clean(spark, fn)
+    ts = [run_clean(spark, fn) for _ in range(3)]
+    return round(statistics.median(ts), 4), round(min(ts), 4)
+
+
+def sf_label(sf_dir: str):
+    """The scale factor a dataset dir names: ``.../sf0.1`` -> 0.1."""
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return float(sf) if sf.replace(".", "").isdigit() else sf
+
+
+def headline(spark, collect, names: list[str], sf_dir: str) -> None:
+    """The headline protocol: warm pass over every slot, then 3
+    interleaved timing rounds reported as MEDIAN-of-3 — the BASELINE.md
+    protocol stat — with the two retry gates and the floor-drift gate.
+    Interleaving defends against the box's intermittent external
+    contention (measured: multi-second windows that inflate whichever
+    query is running 5-10x) — back-to-back repeats of one query can land
+    entirely inside such a window; spread rounds make that improbable,
+    and the median discards a single contaminated round entirely."""
+    for name in names:
+        run_clean(spark, collect(name))
 
     samples: dict[str, list[float]] = {n: [] for n in names}
-    for name in names:
-        qs[name](spark, sf_dir).collect()
-        drop_persisted()
-
-    def calib() -> float:
-        # Fixed-size JVM workload (constant work, no I/O): its wall time
-        # moves ONLY with external box contention, so each round's number
-        # is a contamination witness recorded alongside the results — a
-        # round with calib 2-10x its floor means the query numbers of
-        # that round carry the same inflation.
-        t0 = time.perf_counter()
-        spark.range(200_000_000).selectExpr("sum(id * 3 + 1)").collect()
-        return time.perf_counter() - t0
-
-    def timed(name: str) -> float:
-        t0 = time.perf_counter()
-        qs[name](spark, sf_dir).collect()
-        dt = time.perf_counter() - t0
-        # drop caches operators pin (minhash signatures, q15 revenue)
-        # AND checkpointed RDDs, so storage pressure doesn't accumulate
-        drop_persisted()
-        return dt
-
     calibs: list[float] = []
     for _ in range(3):
-        calibs.append(round(calib(), 4))
+        calibs.append(calib(spark))
         for name in names:
-            samples[name].append(timed(name))
+            samples[name].append(run_clean(spark, collect(name)))
     results = {n: round(statistics.median(ts), 4) for n, ts in samples.items()}
     # Auxiliary floor stat: min-of-3 per query. NOT the protocol number
     # (BASELINE.md's stat is the median) — recorded because the box's
@@ -539,68 +624,45 @@ def main() -> None:
     # steady, median inflated).
     floors = {n: round(min(ts), 4) for n, ts in samples.items()}
 
-    # Contention retry (round-7 protocol, tightened from r6's 3x after
-    # rel_quantile_sketch_mergeable shipped a 4.81 s median over a 1.97 s
-    # floor at 2.4x): a median > 2x its own floor means a contamination
-    # window covered >=2 of that query's 3 samples — the recorded number
-    # would be the box's noise, not the plan. The calib-elevated gate is
-    # gone too (r6's miss happened with calm calib rounds: the windows
-    # fell between calib probes), replaced by an absolute-gap guard so
-    # fixed-overhead jitter on sub-second queries can't spuriously fire.
-    # Re-run that query's three rounds ONCE and keep the cleaner
-    # (lower-median) set, so the committed artifact reflects the plan.
-    # Floors/calib of both passes land in the detail sidecar for audit.
-    retried: dict[str, dict] = {}
-    for name in names:
-        if results[name] > 2.0 * floors[name] and results[name] - floors[name] > 0.5:
-            recal = round(calib(), 4)
-            rerun = [timed(name) for _ in range(3)]
-            med2 = round(statistics.median(rerun), 4)
-            retried[name] = {
-                "first_median": results[name],
-                "rerun_median": med2,
-                "rerun_floor": round(min(rerun), 4),
-                "rerun_calib": recal,
-            }
-            if med2 < results[name]:
-                results[name] = med2
-                floors[name] = min(floors[name], round(min(rerun), 4))
-
-    # Baseline-row retry (round-8 protocol, VERDICT r7 item 1): the floor
-    # gate above only sees SAME-RUN samples, so a contamination window that
-    # covers all three of a query's rounds sails through (happened three
-    # rounds running). Gate 2 compares the committed median against the
-    # query's recorded calm-box BASELINE row: > 2x the row (with the same
-    # absolute-gap guard against sub-second jitter) triggers up to two
-    # bounded re-runs, keeping the best median. If the number still
-    # exceeds 2x the row after retries, an adjudication note lands in the
-    # detail sidecar — either the plan genuinely regressed (the floors
-    # will agree) or the box never calmed down (calib witnesses show it).
-    baseline_retried: dict[str, dict] = {}
-    for name in names:
-        row = BASELINE_ROWS.get(name)
-        if row is None:
-            continue
-        attempts = []
-        while (
-            results[name] > 2.0 * row
-            and results[name] - row > 0.5
-            and len(attempts) < 2
-        ):
-            recal = round(calib(), 4)
-            rerun = [timed(name) for _ in range(3)]
-            med2 = round(statistics.median(rerun), 4)
+    def retry(name: str, ref: float, max_retries: int) -> list[dict]:
+        # Re-run the query's three rounds while retry_due holds, keeping
+        # the cleaner (lower-median) set, so the committed artifact
+        # reflects the plan. Floors/calib of every pass land in the
+        # detail sidecar for audit.
+        attempts: list[dict] = []
+        while retry_due(results[name], ref, len(attempts), max_retries):
+            recal = calib(spark)
+            med2, floor2 = median3(spark, collect(name), warm=False)
             attempts.append(
                 {
                     "median_before": results[name],
                     "rerun_median": med2,
-                    "rerun_floor": round(min(rerun), 4),
+                    "rerun_floor": floor2,
                     "rerun_calib": recal,
                 }
             )
             if med2 < results[name]:
                 results[name] = med2
-                floors[name] = min(floors[name], round(min(rerun), 4))
+                floors[name] = min(floors[name], floor2)
+        return attempts
+
+    # Gate 1, contention retry (tightened from r6's 3x after
+    # rel_quantile_sketch_mergeable shipped a 4.81 s median over a 1.97 s
+    # floor at 2.4x). The calib-elevated gate is gone too (r6's miss
+    # happened with calm calib rounds: the windows fell between probes).
+    retried: dict[str, dict] = {}
+    for name in names:
+        for a in retry(name, floors[name], 1):
+            retried[name] = {"first_median": a.pop("median_before"), **a}
+
+    # Gate 2, baseline-row retry. If the number still exceeds 2x the row
+    # after retries, an adjudication note lands in the detail sidecar —
+    # either the plan genuinely regressed (the floors will agree) or the
+    # box never calmed down (calib witnesses show it).
+    baseline_retried: dict[str, dict] = {}
+    for name in names:
+        row = BASELINE_ROWS.get(name)
+        attempts = [] if row is None else retry(name, row, 2)
         if attempts:
             baseline_retried[name] = {
                 "baseline_row": row,
@@ -609,7 +671,7 @@ def main() -> None:
                 "final_vs_baseline": round(results[name] / row, 2),
                 "adjudication": (
                     "within 2x of BASELINE row after retry"
-                    if results[name] <= 2.0 * row or results[name] - row <= 0.5
+                    if not retry_due(results[name], row, 0, 1)
                     else "still >2x BASELINE row after 2 retries: either a "
                     "plan regression (check floors vs BASELINE.md) or "
                     "sustained box contention (check calib witnesses)"
@@ -625,10 +687,9 @@ def main() -> None:
     # calm, and zero median-gate breaches — so the interleaved gate
     # fires at 2.0x (a floor DOUBLING even under interleave is a real
     # plan-regression signal). The tight 1.3x default remains for
-    # isolated re-measurement contexts (tools/bench_isolated.py
+    # isolated re-measurement contexts (bench.py --isolated
     # adjudications) and the unit test.
     drift = flag_floor_drift(floors, ratio_gate=2.0)
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # compact line carries at most the 3 worst drift ratios + the count;
     # the full per-slot evidence lives in the detail sidecar (the r11
     # first run proved an uncapped dict can blow the 2 KB tail budget)
@@ -642,7 +703,7 @@ def main() -> None:
         # under the driver's ~2 KB tail-capture budget; the detail
         # sidecar keeps the full-precision medians)
         "queries": {n: round(v, 2) for n, v in results.items()},
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "sf": sf_label(sf_dir),
         "floor_drift": {n: d["ratio"] for n, d in worst},
         "floor_drift_n": len(drift),
     }
@@ -674,6 +735,163 @@ def main() -> None:
     line = json.dumps(compact)
     assert len(line) < 2000, f"compact bench line grew to {len(line)}B; trim HEADLINE"
     print(line, flush=True)
+
+
+def isolated(spark, collect, names: list[str], sf_dir: str) -> None:
+    """Isolated protocol: each query in its own block — warm once, then
+    median-of-3 back-to-back, nothing else interleaved. The headline's
+    interleaving makes numbers comparable run-to-run but folds
+    cross-query heap/GC interactions into each figure; this is the
+    protocol BASELINE_ROWS are measured with."""
+    results = {name: median3(spark, collect(name))[0] for name in names}
+    print(
+        json.dumps(
+            {
+                "queries": results,
+                "sf": sf_label(sf_dir),
+                "protocol": "isolated median-of-3 after warm",
+            }
+        )
+    )
+
+
+def sweep(spark, collect, names: list[str], sf_dir: str, threshold: float) -> None:
+    """Full-registry sweep: one timed pass per query (caches dropped
+    between queries), so a newly-added operator can't hide a serial scan
+    or quadratic stage outside the headline set (the round-4 sweep found
+    a 201-second Levenshtein landmine exactly this way). The output is a
+    triage ranking, not a protocol number; adjudicate suspects with
+    ``--isolated``.
+
+    CONTENTION-PROOFING (r14, VERDICT r13 order #2): the r13 sweeps were
+    twice contaminated by multi-minute HOST-side load windows
+    (llm_pca_project2 read 171 s in-sweep vs 2.18 s isolated). A calib
+    probe runs every CHUNK queries; a chunk whose bracketing witnesses
+    exceed CALIB_GATE x the running calib floor is re-run once, and
+    decide_chunk keeps the lower time per query with the witnesses of
+    the run it came from. At the end every unflagged witness pair is
+    re-checked against the final floor (``late_contaminated_chunks``)."""
+
+    def run_one(name: str):
+        try:
+            return round(run_clean(spark, collect(name)), 3), None
+        except Exception as ex:  # noqa: BLE001
+            return None, str(ex).splitlines()[0][:200]
+
+    times: dict[str, float] = {}
+    witnesses: dict[str, list[float]] = {}
+    failures: dict[str, str] = {}
+    retried_chunks: list[dict] = []
+    unflagged: list[dict] = []
+
+    # seed the calib floor with 3 opening probes (also JIT-warms the probe)
+    calib_floor = min(calib(spark) for _ in range(3))
+    c_before = calib(spark)
+    calib_floor = min(calib_floor, c_before)
+    for i in range(0, len(names), CHUNK):
+        chunk = names[i : i + CHUNK]
+        first = {}
+        for name in chunk:
+            dt, err = run_one(name)
+            if err is None:
+                first[name] = dt
+            else:
+                failures[name] = err
+        c_after = calib(spark)
+        calib_floor = min(calib_floor, c_after)
+        first_calibs, rerun, rerun_calibs = [c_before, c_after], None, None
+        if over_calib_gate(first_calibs, calib_floor):
+            # the span overlapped a host-contention window: one bounded
+            # re-run per query in the chunk, keep the lower time
+            r_before = calib(spark)
+            rerun = {n: dt for n in first if (dt := run_one(n)[0]) is not None}
+            c_after = calib(spark)
+            calib_floor = min(calib_floor, r_before, c_after)
+            rerun_calibs = [r_before, c_after]
+            retried_chunks.append(
+                {"queries": chunk, "dirty_calibs": first_calibs, "rerun_calibs": rerun_calibs}
+            )
+        kept, records = decide_chunk(first, first_calibs, rerun, rerun_calibs)
+        unflagged += records
+        for name, (dt, w) in kept.items():
+            times[name], witnesses[name] = dt, w
+            print(f"{dt:9.3f}s  {name}  calib={w}", file=sys.stderr)
+        c_before = c_after
+
+    ranked = dict(sorted(times.items(), key=lambda kv: -kv[1]))
+    print(
+        json.dumps(
+            {
+                "metric": "full_registry_sweep",
+                "sf_dir": sf_dir,
+                "n": len(times),
+                "total_sec": round(sum(times.values()), 2),
+                "calib_floor": calib_floor,
+                "n_retried_chunks": len(retried_chunks),
+                "retried_chunks": retried_chunks,
+                "late_contaminated_chunks": late_contaminated(unflagged, calib_floor),
+                "over_threshold": {k: v for k, v in ranked.items() if v >= threshold},
+                "slowest": dict(list(ranked.items())[:15]),
+                "failures": failures,
+                "witnesses": {k: witnesses[k] for k in ranked},
+            }
+        )
+    )
+
+
+USAGE = (
+    "usage: bench.py [--isolated [--rotate K] [sf_dir] query ... "
+    "| --sweep [sf_dir] [threshold_sec]]"
+)
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    args = sys.argv[1:]
+    mode = args.pop(0) if args and args[0] in ("--isolated", "--sweep") else None
+    rotate = 0
+    if mode == "--isolated" and "--rotate" in args:
+        i = args.index("--rotate")
+        if i + 1 >= len(args):
+            raise SystemExit(USAGE)
+        rotate = int(args[i + 1])
+        del args[i : i + 2]
+    if mode and args and os.path.isdir(args[0]):
+        sf_dir = args.pop(0)
+
+    import __spark_entry__ as e
+    from randas_spark.session import get_spark
+
+    qs = e.queries()
+    if mode == "--isolated":
+        if not args:
+            raise SystemExit(USAGE)
+        unknown = [n for n in args if n not in qs]
+        if unknown:
+            # validate BEFORE running: a typo'd later name would discard
+            # minutes of measurements already taken (JSON prints at the end)
+            raise SystemExit(f"unknown query name(s): {unknown}")
+        if rotate:
+            # start-position rotation (BASELINE.md r10 finding: the FIRST
+            # query measured in a fresh session absorbs JIT/codegen warmup
+            # the single warm run does not fully discharge — q01 measured
+            # 0.74-0.93 s first-in-session vs 0.44-0.54 after any other
+            # query). Rotating the start per pass spreads the bias so the
+            # cross-pass median never sees the same victim twice.
+            k = rotate % len(args)
+            args = args[k:] + args[:k]
+
+    spark = get_spark("bench")
+
+    def collect(name: str):
+        return lambda: qs[name](spark, sf_dir).collect()
+
+    if mode == "--isolated":
+        isolated(spark, collect, args, sf_dir)
+    elif mode == "--sweep":
+        sweep(spark, collect, list(qs), sf_dir, float(args[0]) if args else 5.0)
+    else:
+        headline(spark, collect, [n for n in HEADLINE if n in qs] or list(qs)[:8], sf_dir)
 
 
 if __name__ == "__main__":

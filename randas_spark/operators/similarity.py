@@ -378,10 +378,11 @@ def knn_ivf_det(
 
     Since r14 both rankings run through the shared assign_topk_cells
     Arrow kernel (bit-exact with the crossJoin + row_number form they
-    replace — see its docstring; the persisted twin ivf_build_index has
-    assigned through the kernel since r12, and knn_ivf_query is pinned
-    bit-identical to this fused form, so the two paths now share one
-    ranking implementation instead of two equal-by-proof ones). The
+    replace — see its docstring). The persisted twin ivf_build_index
+    also assigns corpus vectors through the kernel (since r12), but
+    knn_ivf_query still ranks its probes with crossJoin + row_number;
+    it is pinned bit-identical to this fused form, so the two paths
+    are equal by proof, not one implementation. The
     retired declarative shape materialized |corpus| x n_cells
     interpreted-fold rows in ONE task just to keep the top cell per
     vector — with the recall audit's adaptive n_cells = N/32 panel that
@@ -389,6 +390,11 @@ def knn_ivf_det(
     kernel scores each Arrow batch against the collected centroid panel
     with numpy and emits only the survivors (vectors/norms re-attached
     by one narrow equi-join, the knn_graph_ivf-measured trade).
+
+    Not fully lazy: building the plan runs one eager Spark job,
+    ``cent.collect()`` (a TakeOrdered over the corpus), to hand the
+    centroid panel to both kernel calls. Calling this function
+    therefore scans ``corpus`` once before any action on the result.
     """
     from randas_spark.operators.sampling import _md5_hex
 
@@ -659,12 +665,6 @@ def _pq_sub_dist_sql(j: int, sub: int, carr: list[float]) -> str:
         "(x, mu) -> (CAST(x AS DOUBLE) - mu) * (CAST(x AS DOUBLE) - mu)),"
         "0.0D,(acc, z) -> acc + z)"
     )
-
-
-def _pq_sub_dist(j: int, sub: int, carr: list[float]) -> Column:
-    """Squared L2 between the j-th subvector of F.col('qx') and a literal
-    sub-centroid, folded in fixed order from 0.0 (bit-deterministic)."""
-    return F.expr(_pq_sub_dist_sql(j, sub, carr))
 
 
 def _pq_code_col(j: int, sub: int, cents_j: list) -> Column:

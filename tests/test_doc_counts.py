@@ -112,3 +112,67 @@ def test_floor_drift_gate_fires_on_ratio_and_abs_gap_together():
     )
     assert set(flagged) == {"big"}
     assert flagged["big"] == {"measured_floor": 5.6, "row_floor": 4.0, "ratio": 1.4}
+
+
+def test_retry_gates_fire_on_ratio_and_abs_gap_together():
+    """bench.py's two retry gates re-run a slot only when its median is
+    BOTH over 2x the reference and more than 0.5 s above it, and stop
+    at their retry budget: one re-run for the contention gate (the
+    run's own floor), two for the baseline-row gate."""
+    import bench
+
+    for max_retries in (1, 2):  # contention gate, baseline-row gate
+        assert bench.retry_due(2.6, 1.0, 0, max_retries)      # 2.6x, +1.6 s
+        assert not bench.retry_due(1.9, 1.0, 0, max_retries)  # 1.9x, +0.9 s
+        assert not bench.retry_due(0.5, 0.2, 0, max_retries)  # 2.5x, +0.3 s
+        assert not bench.retry_due(2.0, 1.0, 0, max_retries)  # exactly 2x
+    assert not bench.retry_due(2.6, 1.0, 1, 1)
+    assert bench.retry_due(2.6, 1.0, 1, 2)
+    assert not bench.retry_due(2.6, 1.0, 2, 2)
+
+
+def test_sweep_chunk_keeps_witnesses_of_the_kept_run():
+    """A retried sweep chunk keeps each query's lower time, witnessed by
+    the calib pair that brackets THAT run — a first-run time kept over
+    a slower re-run keeps the first run's (dirty) witnesses."""
+    import bench
+
+    dirty, clean = [0.9, 0.3], [0.3, 0.31]
+    kept, records = bench.decide_chunk(
+        {"a": 1.0, "b": 2.0, "c": 1.0}, dirty, {"a": 1.5, "b": 1.8}, clean
+    )
+    assert kept == {"a": (1.0, dirty), "b": (1.8, clean), "c": (1.0, dirty)}
+    # only the re-run pair was let through without a gate flag
+    assert records == [{"queries": ["b"], "calibs": clean}]
+
+    kept, records = bench.decide_chunk({"a": 1.0}, clean)
+    assert kept == {"a": (1.0, clean)}
+    assert records == [{"queries": ["a"], "calibs": clean}]
+
+
+def test_sweep_rechecks_unflagged_witnesses_against_the_final_floor():
+    """A chunk judged against an inflated running floor (the session
+    started inside a contention window) passes the 2.0x gate at the
+    time; the end-of-sweep recheck against the final floor lists it."""
+    import bench
+
+    early = {"queries": ["a"], "calibs": [0.5, 0.45]}
+    calm = {"queries": ["b"], "calibs": [0.22, 0.21]}
+    assert not bench.over_calib_gate(early["calibs"], 0.3)  # running floor
+    assert bench.late_contaminated([early, calm], 0.2) == [early]
+    assert bench.late_contaminated([early, calm], 0.3) == []
+
+
+def test_bench_and_every_tool_module_import():
+    """Import smoke, no Spark session: a helper moved or renamed in
+    bench.py breaks the tools that import it here, not on their next
+    ad-hoc run."""
+    import importlib
+
+    mods = ["bench"] + sorted(
+        "tools." + f[:-3]
+        for f in os.listdir(os.path.join(REPO, "tools"))
+        if f.endswith(".py")
+    )
+    for mod in mods:
+        assert callable(getattr(importlib.import_module(mod), "main", None)), mod

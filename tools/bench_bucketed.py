@@ -17,21 +17,12 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def _median3(fn) -> float:
-    fn()  # warm
-    ts = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        fn()
-        ts.append(time.perf_counter() - t0)
-    return round(statistics.median(ts), 4)
+from bench import median3  # noqa: E402
 
 
 def main() -> None:
@@ -63,7 +54,7 @@ def main() -> None:
             )
         )
 
-    plain_sec = _median3(lambda: join_agg(li, orders).collect())
+    plain_sec = median3(spark, lambda: join_agg(li, orders).collect())[0]
 
     t0 = time.perf_counter()
     write_bucketed(li, "li_bench_b", ["l_orderkey"], num_buckets=32, sort_cols=["l_orderkey"])
@@ -81,7 +72,7 @@ def main() -> None:
     # check the join inputs specifically: no Exchange below SortMergeJoin)
     join_part = plan.split("SortMergeJoin")[-1] if "SortMergeJoin" in plan else plan
     no_exchange = "Exchange hashpartitioning" not in join_part
-    bucketed_sec = _median3(lambda: joined.collect())
+    bucketed_sec = median3(spark, lambda: joined.collect())[0]
 
     spark.sql("DROP TABLE IF EXISTS li_bench_b")
     spark.sql("DROP TABLE IF EXISTS orders_bench_b")
@@ -109,8 +100,8 @@ def main() -> None:
         ("q18", lambda: q18_core(li_full, o_full, cust), lambda: q18_core(li_b, o_b, cust)),
         ("q21", lambda: q21_core(li_full, o_full, supp), lambda: q21_core(li_b, o_b, supp)),
     ]:
-        p = _median3(lambda: plain_fn().collect())
-        b = _median3(lambda: bucket_fn().collect())
+        p = median3(spark, lambda: plain_fn().collect())[0]
+        b = median3(spark, lambda: bucket_fn().collect())[0]
         plan_b = bucket_fn()._jdf.queryExecution().executedPlan().toString()
         jp = plan_b.split("SortMergeJoin")[-1] if "SortMergeJoin" in plan_b else plan_b
         trio[name] = {

@@ -7,9 +7,9 @@ the PPJoin+ suffix/positional filter is worth its complexity; if the
 candidate join dominates, it isn't (the filter only shrinks the verify
 input).
 
-Protocol: clean-unpersist between samples (the r8 measurement fix —
-clearCache misses localCheckpoint RDDs), median-of-3 after a warm pass,
-one stage timed at a time:
+Protocol: bench.median3 (one warm pass, then 3 samples with every
+persisted RDD dropped between them, off the clock), both stages timed
+inside each sample:
 
 - t_cand  = build shingles + prefixes + candidate pairs, materialized
   via localCheckpoint (so the verify timing below excludes it);
@@ -31,6 +31,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import median3, sf_label  # noqa: E402
+
 
 def main() -> None:
     args = sys.argv[1:]
@@ -44,42 +46,30 @@ def main() -> None:
     from randas_spark.session import get_spark
 
     spark = get_spark("ppjoin-stages")
-
-    def drop_persisted() -> None:
-        spark.catalog.clearCache()
-        jsc = spark.sparkContext._jsc.sc()
-        it = jsc.getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(True)
-
     docs = t(spark, sf_dir, "documents").select("doc_id", "text")
 
-    t_cand, t_verify, n_cand, n_pairs = [], [], 0, 0
-    for i in range(4):  # sample 0 is the warm pass
+    laps = []  # (t_cand, t_verify, n_cand, n_pairs) per sample, warm first
+
+    def both_stages() -> None:
         t0 = time.perf_counter()
         sh, cand = _ppjoin_candidates(docs, "doc_id", "text", 5, threshold)
         cand = cand.localCheckpoint()  # materializes the candidate stage
         n_cand = cand.count()
-        tc = time.perf_counter() - t0
-
         t1 = time.perf_counter()
         n_pairs = _ppjoin_verify(sh, cand, threshold).count()
-        tv = time.perf_counter() - t1
-        if i > 0:
-            t_cand.append(tc)
-            t_verify.append(tv)
-        drop_persisted()
+        laps.append((t1 - t0, time.perf_counter() - t1, n_cand, n_pairs))
 
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    median3(spark, both_stages)
+    t_cand, t_verify, n_cand, n_pairs = zip(*laps[1:])
     print(
         json.dumps(
             {
-                "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+                "sf": sf_label(sf_dir),
                 "threshold": threshold,
                 "t_cand": round(statistics.median(t_cand), 3),
                 "t_verify": round(statistics.median(t_verify), 3),
-                "n_cand": n_cand,
-                "n_pairs": n_pairs,
+                "n_cand": n_cand[-1],
+                "n_pairs": n_pairs[-1],
                 "protocol": "isolated median-of-3 after warm; clean unpersist",
             }
         )

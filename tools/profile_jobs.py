@@ -1,24 +1,27 @@
 """Per-job wall-time breakdown for one registry query (guide §1/§7.1).
 
-bench_isolated gives the per-query wall; this shows WHERE it goes inside
-the query: every Spark job the collect triggers, with its duration,
-stage names and task counts, pulled from the UI REST API after the run.
-The session mirrors randas_spark.session.get_spark exactly except
-spark.ui.enabled=true (measurement-only; the bench session is untouched).
+``bench.py --isolated`` gives the per-query wall; this shows WHERE it
+goes inside the query: every Spark job the measured pass triggers, with
+its duration, task count and call site. The session is the bench's own
+(randas_spark.session.get_spark, unchanged). The warm and measured
+passes run under separate job groups, and the jobs are read back from
+the driver's status store, so no UI or REST server is needed and no
+warm-pass job is mistaken for a measured one. Job groups are thread-local:
+a job a query launches from a plain Python thread carries no group and
+is not listed.
 
 Usage: python tools/profile_jobs.py [sf_dir] query
-Prints one line per job: seconds, stage-count, job description/site.
+Prints one line per measured-pass job: seconds, task count, call site.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import run_clean  # noqa: E402
 
 
 def main() -> None:
@@ -32,75 +35,39 @@ def main() -> None:
         raise SystemExit("usage: profile_jobs.py [sf_dir] query")
     name = args[0]
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"profile-{name}")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.ansi.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        # mirror the tuned session (randas_spark.session.get_spark): without
-        # this the profile session pays the per-DataFrame-call capture the
-        # bench session does not, inflating the plan/driver gap 2-3x
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
     import __spark_entry__ as e
+    from randas_spark.session import get_spark
 
     qs = e.queries()
     if name not in qs:
         raise SystemExit(f"unknown query {name}")
+    spark = get_spark(f"profile-{name}")
+    sc = spark.sparkContext
+
+    def run() -> None:
+        qs[name](spark, sf_dir).collect()
 
     # warm pass (JVM/codegen/file cache), then the measured pass
-    qs[name](spark, sf_dir).collect()
-    first_ts = time.time()
-    t0 = time.perf_counter()
-    qs[name](spark, sf_dir).collect()
-    wall = time.perf_counter() - t0
-
-    ui = spark.sparkContext.uiWebUrl
-    apps = json.load(urllib.request.urlopen(f"{ui}/api/v1/applications"))
-    app_id = apps[0]["id"]
-    jobs = json.load(
-        urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/jobs")
-    )
-    import datetime
-
-    def ts(s):
-        return datetime.datetime.strptime(
-            s, "%Y-%m-%dT%H:%M:%S.%f%Z"
-        ).replace(tzinfo=datetime.timezone.utc).timestamp()
+    sc.setJobGroup("warm", name)
+    run_clean(spark, run)
+    sc.setJobGroup("measured", name)
+    wall = run_clean(spark, run)
 
     rows = []
-    for j in sorted(jobs, key=lambda j: j["jobId"]):
-        start = ts(j["submissionTime"])
-        if start < first_ts - 0.5:  # warm-pass job
+    it = sc._jsc.sc().statusStore().jobsList(None).iterator()
+    while it.hasNext():
+        j = it.next()
+        if not j.jobGroup().contains("measured"):
             continue
-        end = ts(j["completionTime"]) if "completionTime" in j else start
-        rows.append(
-            (
-                j["jobId"],
-                end - start,
-                j.get("numTasks", 0),
-                (j.get("description") or j.get("name") or "")[:110],
-            )
-        )
+        start = j.submissionTime().get().getTime()
+        end = j.completionTime().get().getTime() if j.completionTime().isDefined() else start
+        rows.append((j.jobId(), (end - start) / 1000, j.numTasks(), j.name()[:110]))
+    rows.sort()
     print(f"== {name}: wall {wall:.3f}s, {len(rows)} jobs (measured pass) ==")
-    for jid, secs, ntasks, desc in rows:
-        print(f"job {jid:4d}  {secs:7.3f}s  {ntasks:5d} tasks  {desc}")
-    gaps = wall - sum(r[1] for r in rows)
-    print(f"sum(job walls) {sum(r[1] for r in rows):.3f}s; plan/driver gap {gaps:.3f}s")
+    for jid, secs, ntasks, site in rows:
+        print(f"job {jid:4d}  {secs:7.3f}s  {ntasks:5d} tasks  {site}")
+    jobs_wall = sum(r[1] for r in rows)
+    print(f"sum(job walls) {jobs_wall:.3f}s; plan/driver gap {wall - jobs_wall:.3f}s")
 
 
 if __name__ == "__main__":
